@@ -68,9 +68,6 @@ RUNTIME_CONFS: dict[str, str] = {
     # disk-split × codec-ratio ≲ per-core memory budget).
     "spark.sql.files.maxPartitionBytes":
         os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"),
-    # per-day idempotent overwrite == the reference's whole-partition
-    # rewrite primitive (Parquet Export/db_extractor.py:247-248)
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # metadata-only MIN/MAX/COUNT from parquet footers (row_integrity.py:68)
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.parquet.compression.codec": "snappy",

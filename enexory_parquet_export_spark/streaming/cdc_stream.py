@@ -7,7 +7,7 @@ events per (day, pk), and merges them into the per-day parquet files.
 That is exactly the micro-batch model: ``readStream`` over an
 append-only changelog directory, and each micro-batch runs the SAME
 batch operators (operators.cdc.consolidate + apply_changes) against
-the current mirror, writing back with dynamic partition overwrite.
+the current mirror, writing back through ``sources.writer.commit``.
 
 Late data: the reference tolerates late rows in the newest day by
 refetching that whole day (db_extractor.py:284-291) — partition
@@ -77,28 +77,16 @@ def merge_batch(spark: SparkSession, batch: DataFrame, mirror_path: str) -> None
     touched = [r["day"] for r in changes.select("day").distinct().collect()]
     if not touched:
         return
-    existing = set(list_days(spark, mirror_path))
-    if existing:
+    if list_days(spark, mirror_path):
         base = (read_day_partitioned(spark, mirror_path)
                 .filter(F.col("day").isin(touched))
                 .select("day", "pk", "date_time", "value", "ts_epoch"))
     else:
         base = spark.createDataFrame(
             [], "day string, pk bigint, date_time string, value double, ts_epoch bigint")
-    # bounded micro-batch-scoped cache with explicit unpersist below —
-    # two consumers (surviving-day probe + partition write) of one
-    # already-materialized batch; never on a declared-query
-    # construction path, so the bench purity counter can't be fooled
-    merged = apply_changes(base, changes).persist()  # lint: allow-persist
-    try:
-        surviving = [r["day"] for r in merged.select("day").distinct().collect()]
-        if surviving:
-            write_day_partitioned(merged, mirror_path)
-        remove_empty_days(spark, mirror_path,
-                          touched_days=[d for d in touched if d in existing or d in surviving],
-                          surviving_days=surviving)
-    finally:
-        merged.unpersist()
+    surviving = write_day_partitioned(apply_changes(base, changes), mirror_path)
+    remove_empty_days(spark, mirror_path, touched_days=touched,
+                      surviving_days=surviving)
 
 
 def start_cdc_merge_stream(changelog: DataFrame, mirror_path: str,
@@ -108,9 +96,10 @@ def start_cdc_merge_stream(changelog: DataFrame, mirror_path: str,
 
     ``available_now=True`` drains everything currently in the source and
     stops — the cron-batch replacement; ``False`` runs continuously.
-    Exactly-once: checkpointed source offsets + idempotent per-day
-    overwrite (re-merging a batch of already-applied upserts is a
-    no-op; the reference relies on the same idempotence).
+    Failure guarantee: each day is swapped in atomically, a commit cut
+    by a crash is recovered on the next access, and the restarted query
+    re-applies the cut batch, which is idempotent per (day, pk) (the
+    reference relies on the same idempotence).
     """
     def _merge(batch: DataFrame, _batch_id: int) -> None:
         merge_batch(batch.sparkSession, batch, mirror_path)
@@ -174,8 +163,9 @@ def start_binlog_text_stream(spark: SparkSession, binlog_dir: str,
     layering the reference uses: mysqlbinlog writes a complete text
     segment; the consolidator processes whole segments.
 
-    Exactly-once story: checkpointed file-source offsets (each segment
-    is consumed once) + idempotent per-day overwrite in the merge.
+    Failure guarantee: checkpointed file-source offsets + the merge's
+    per-day atomic swap, recovered on the next access, and idempotent
+    re-apply of a retried batch.
 
     A micro-batch may contain MANY segments (availableNow drains a
     backlog into one batch); ``assign_global_seq`` rebases the per-file

@@ -33,10 +33,11 @@ def test_compact_days_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
     ev = _events_with_day(spark, sf_dir)
     five = [r["day"] for r in ev.select("day").distinct().limit(5).collect()]
     ev = ev.filter(F.col("day").isin(five))
-    # fragment the way CDC merges do: one small file per day per batch
+    # fragment the way concurrent appenders do: one small file per
+    # day per append
     for i in range(3):
-        write_day_partitioned(ev.filter(F.col("event_id") % 3 == i),
-                              path, mode="append")
+        (ev.filter(F.col("event_id") % 3 == i).repartition("day")
+           .write.mode("append").partitionBy("day").parquet(path))
     before = day_file_stats(spark, path)
     assert all(n > 1 for n, _ in before.values())
     rows_before = sorted(map(tuple, read_day_partitioned(spark, path)

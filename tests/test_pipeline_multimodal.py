@@ -82,6 +82,52 @@ class TestPipeline:
         assert out.count() == 2
 
 
+MIRROR_SCHEMA = "day string, id bigint, date_time string, value double, ts string"
+
+
+def mirror_rows(spark, mirror):
+    return {(r["day"], r["id"], r["date_time"])
+            for r in read_day_partitioned(spark, mirror).collect()}
+
+
+class TestSync:
+    def test_repair_keeps_rows_of_the_destination_day(self, spark, tmp_path):
+        """A row fixed into another day joins that day's rows; it does
+        not replace them."""
+        from enexory_parquet_export_spark.sources.writer import (
+            write_day_partitioned,
+        )
+        mirror = str(tmp_path / "m")
+        rows = [("0001-01-01", 1, SENTINEL_DT, 1.0, SENTINEL_DT),
+                ("0001-01-01", 2, SENTINEL_DT, 2.0, SENTINEL_DT),
+                ("2024-01-02", 3, "garbage", 3.0, "2024-01-02 10:00:00"),
+                ("2024-01-03", 4, "2024-01-03 10:00:00", 4.0,
+                 "2024-01-03 10:00:00")]
+        write_day_partitioned(spark.createDataFrame(rows, MIRROR_SCHEMA), mirror)
+        assert P.repair(spark, mirror) == 1
+        assert mirror_rows(spark, mirror) == {
+            ("0001-01-01", 1, SENTINEL_DT), ("0001-01-01", 2, SENTINEL_DT),
+            ("0001-01-01", 3, SENTINEL_DT),
+            ("2024-01-03", 4, "2024-01-03 10:00:00")}
+        assert list_days(spark, mirror) == ["0001-01-01", "2024-01-03"]
+
+    def test_repair_of_a_partly_damaged_day(self, spark, tmp_path):
+        """The repaired day keeps its valid rows; only the damaged one
+        is normalized in place."""
+        from enexory_parquet_export_spark.sources.writer import (
+            write_day_partitioned,
+        )
+        mirror = str(tmp_path / "m")
+        rows = [("2024-01-01", i, f"2024-01-01 10:00:0{i}", float(i),
+                 f"2024-01-01 10:00:0{i}") for i in range(1, 6)]
+        rows[0] = rows[0][:2] + ("2024-01-01T10:00:01",) + rows[0][3:]
+        write_day_partitioned(spark.createDataFrame(rows, MIRROR_SCHEMA), mirror)
+        assert P.repair(spark, mirror) == 1
+        assert mirror_rows(spark, mirror) == {
+            ("2024-01-01", i, f"2024-01-01 10:00:0{i}") for i in range(1, 6)}
+        assert P.repair(spark, mirror) == 0
+
+
 class TestMultimodal:
     def test_extract_features_deterministic(self, spark, sf_dir):
         docs = load_table(spark, sf_dir, "documents").limit(20)
