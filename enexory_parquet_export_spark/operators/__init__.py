@@ -1,6 +1,5 @@
 from .cdc import (  # noqa: F401
-    derive_changelog, consolidate, snapshot_from_inserts, apply_changes,
-    cdc_merge,
+    derive_changelog, consolidate, apply_changes, cdc_merge,
 )
 from .components import connected_components  # noqa: F401
 from .dedup import containment, decontaminate, exact_dedup  # noqa: F401

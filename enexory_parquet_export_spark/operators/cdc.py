@@ -1,4 +1,4 @@
-"""CDC consolidation + merge — the engine's flagship operator (Q23).
+"""CDC consolidation + merge — the engine's flagship operator (q24).
 
 Spark-first restatement of the reference's binlog merge pipeline
 (Parquet Export/consolidate.cpp).  The reference consumes a keyed
@@ -28,10 +28,11 @@ So the consolidated effective op per (day, pk) is::
     'U'  otherwise (only Us)                (payload = overall last row)
 
 Scale notes: consolidation is ONE hash aggregation on the natural key
-(day, pk) — no window sort needed (``max_by`` keeps the last payload).
-The merge is a single shuffle-on-key full-outer join; with AQE on, a
-small consolidated changelog against a huge base becomes a broadcast
-join automatically, and only touched day-partitions are rewritten.
+(day, pk) — no window sort needed (``max_by`` keeps the last payload),
+and map-side partial combine collapses a hot key before the shuffle.
+q24 (:func:`cdc_merge`) is that one aggregation plus the exact median
+split; :func:`apply_changes` is a keyed full-outer join, kept for the
+mirror merge, where the base really is stored data.
 """
 
 from __future__ import annotations
@@ -100,23 +101,6 @@ def consolidate(changelog: DataFrame) -> DataFrame:
         F.col("_last.date_time").alias("date_time"),
         F.col("_last.value").alias("value"),
         F.col("_last.ts_epoch").alias("ts_epoch"),
-    )
-
-
-def snapshot_from_inserts(changelog: DataFrame, upto_seq) -> DataFrame:
-    """Base snapshot = replay of all 'I' rows with seq <= upto_seq,
-    insert-as-upsert (last I wins per (day, pk)) — FIXTURES.md §2.1.
-
-    ``upto_seq`` may be a literal or a Column (e.g. a scalar subquery).
-    """
-    inserts = changelog.filter((F.col("op") == "I") & (F.col("seq") <= upto_seq))
-    return (
-        inserts.groupBy("day", "pk")
-        .agg(F.max_by(F.struct("date_time", "value", "ts_epoch"), "seq").alias("_r"))
-        .select("day", "pk",
-                F.col("_r.date_time").alias("date_time"),
-                F.col("_r.value").alias("value"),
-                F.col("_r.ts_epoch").alias("ts_epoch"))
     )
 
 
@@ -210,45 +194,55 @@ def merge_into_sql(base_table: str, changes_rel: str, *,
     )
 
 
-def cdc_merge(events: DataFrame, split_seq=None) -> DataFrame:
-    """End-to-end Q23: derive changelog → snapshot base at the median
-    seq → consolidate the tail → merge.  Returns the final mirror with
-    the reference's output rendering: ``id``=pk, 19-char ``date_time``,
-    nullable ``value``, ``ts`` rendered at fixed UTC+2
-    (consolidate.cpp:45-53).
+def _lower_median_seq(log: DataFrame) -> int:
+    """Exact lower median of ``seq``: the value at rank ceil(n/2).
+
+    ``seq <= s`` then selects the same rows as the oracle's
+    interpolated ``seq <= median(seq)`` for any n.  Two driver
+    aggregations: an approx-percentile bracket at 0.5 ± 2/accuracy,
+    whose rank error is at most n/accuracy, so it holds rank ceil(n/2);
+    then the count below the bracket plus the sorted seqs inside it.
+    Spark's exact ``percentile`` is an object-hash aggregate without
+    codegen: 61 s against this helper's 4-6 s on 10M rows, 4 cores.
     """
+    acc = 1000
+    seq = F.col("seq")
+    n, (lo, hi) = log.agg(
+        F.count(seq), F.percentile_approx(
+            seq, [0.5 - 2 / acc, 0.5 + 2 / acc], acc)).first()
+    if n == 0:   # no seq: every split selects the same (empty) rows
+        return 0
+    below, inside = log.agg(
+        F.count(F.when(seq < lo, 1)),
+        F.sort_array(F.collect_list(
+            F.when(seq.between(lo, hi), seq)))).first()
+    i = (n + 1) // 2 - below - 1
+    if not 0 <= i < len(inside):
+        raise RuntimeError(
+            f"median rank {(n + 1) // 2} of {n} outside the approx "
+            f"bracket [{lo}, {hi}] ({below} rows below it)")
+    return inside[i]
+
+
+def cdc_merge(events: DataFrame) -> DataFrame:
+    """End-to-end q24: replay every 'I' with ``seq <= s`` (s = exact
+    median, FIXTURES.md §2.1) as the base, then merge the consolidated
+    tail ``seq > s``.  Output rendering as the reference's: ``id``=pk,
+    19-char ``date_time``, nullable ``value``, ``ts`` at fixed UTC+2
+    (consolidate.cpp:45-53).
+
+    A base row is an 'I' that precedes every tail event, so base and
+    tail are ONE consolidation of ``op = 'I' OR seq > s``, keeping the
+    keys whose effective op is 'I': a tail D after the last I kills
+    the key, a tail I upserts, a U-only tail on a base key folds into
+    its 'I' with the last U's payload, and a U-only tail on a missing
+    key stays 'U' and is dropped (consolidate.cpp:194).
+    """
+    # no checkpoint on the changelog: it is scan+project, and block-
+    # storing it measured slower at every size (BASELINE r7)
     log = derive_changelog(events)
-    # NO checkpoint on the changelog (the token/input-class rule,
-    # BASELINE r7): block-storing one row per change measured SLOWER
-    # at every size — 4.5 → 3.2 s at 10M and 87–108 → 20 s at 100M
-    # events — because the derivation is scan+project (recomputing it
-    # per consumer pipelines into each branch's partial agg) while
-    # the block store pays write + memory pressure on 100M rows.
-    if split_seq is None:
-        # compute the median split INSIDE the plan: a 1-row aggregate
-        # broadcast-crossed into the changelog — no driver collect, no
-        # extra job per invocation (callers that already know the split
-        # pass it and skip even this)
-        # APPROXIMATE median: the merged mirror is split-invariant by
-        # construction (snapshot-at-split + replay-after-split yields
-        # the same final state for ANY split point), so the split only
-        # needs to be NEAR the middle for balance — and Spark's exact
-        # median is an object-hash aggregate that measured 34 s of
-        # q24's 40 s total at 10M changes, while the single-pass
-        # approx sketch reads in ~1 s.
-        med = log.agg(F.percentile_approx("seq", F.lit(0.5), F.lit(1000))
-                       .alias("_split_seq"))
-        log = log.crossJoin(F.broadcast(med))
-        split_col = F.col("_split_seq")
-    else:
-        split_col = F.lit(split_seq)
-    base = snapshot_from_inserts(log, split_col)
-    tail = consolidate(log.filter(F.col("seq") > split_col))
-    merged = apply_changes(base, tail)
-    return merged.select(
-        F.col("day"),
-        F.col("pk").alias("id"),
-        "date_time",
-        "value",
-        utc2_render(F.col("ts_epoch")).alias("ts"),
-    )
+    s = _lower_median_seq(log)
+    merged = consolidate(log.filter((F.col("op") == "I") | (F.col("seq") > s)))
+    return merged.filter(F.col("op") == "I").select(
+        "day", F.col("pk").alias("id"), "date_time", "value",
+        utc2_render(F.col("ts_epoch")).alias("ts"))

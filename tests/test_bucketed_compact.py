@@ -31,7 +31,8 @@ def test_compact_days_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
     # r13 driver pytest-gate timeout).  Five days exercise the same
     # contract: >1 file per day before, exactly 1 after, rows equal.
     ev = _events_with_day(spark, sf_dir)
-    five = [r["day"] for r in ev.select("day").distinct().limit(5).collect()]
+    five = [r["day"] for r in
+            ev.select("day").distinct().orderBy("day").limit(5).collect()]
     ev = ev.filter(F.col("day").isin(five))
     # fragment the way concurrent appenders do: one small file per
     # day per append

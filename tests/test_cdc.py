@@ -6,7 +6,9 @@ strongest test pattern, HA_test2.py:158-256, restated for the engine).
 
 from __future__ import annotations
 
+import os
 import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import Row
@@ -307,3 +309,59 @@ if HAVE_HYP:
         merged = run_merge_clauses(
             base, [(pk, op, v) for pk, (op, v) in cons.items()])
         assert merged == sequential_replay(base, events)
+
+    @settings(max_examples=300, deadline=None)
+    @given(events=_events, data=st.data())
+    def test_insert_base_plus_tail_is_one_consolidation(events, data):
+        """cdc_merge's identity: the replay of every I with seq <= s,
+        merged with the rows after s, equals ONE consolidation of
+        [I rows <= s] + [all rows > s], keeping the 'I' keys — for any
+        split, including below and above every seq."""
+        s = data.draw(st.sampled_from([-1, 10_001, *(e[0] for e in events)]))
+        base = {pk: v for seq, pk, op, v in sorted(events)
+                if op == "I" and seq <= s}
+        tail = [e for e in events if e[0] > s]
+        cons = consolidate_pure(
+            [e for e in events if e[2] == "I" and e[0] <= s] + tail)
+        assert ({pk: v for pk, (op, v) in cons.items() if op == "I"}
+                == sequential_replay(base, tail))
+
+
+# ---------------------------------------------------------------------------
+# q24 end to end against its DuckDB oracle.  The base is split at the
+# EXACT median seq (FIXTURES.md §2.1); an approximate split drifts by
+# tens of ranks once events arrive in several partitions, which moves
+# rows between base replay and tail merge and changes the answer.
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("sf, parts", [("sf0.001", None), ("sf0.1", 4)])
+def test_q24_cdc_merge_matches_oracle(spark, sf_dir, sf, parts):
+    from enexory_parquet_export_spark.operators.cdc import cdc_merge
+    from enexory_parquet_export_spark.queries import ORACLE_SQL
+    from enexory_parquet_export_spark.sources.tables import load_table
+    from tools.check_oracle import duck_connection, normalize
+
+    d = os.path.join(os.path.dirname(sf_dir), sf)
+    events = load_table(spark, d, "events")
+    if parts:
+        events = events.repartition(parts)
+    got = cdc_merge(events)
+    cur = duck_connection(d).execute(ORACLE_SQL["q24_cdc_merge"])
+    want_cols = [c[0] for c in cur.description]
+    want = normalize(want_cols, cur.fetchall())
+    have = normalize(got.columns, [tuple(r) for r in got.collect()])
+    assert sorted(got.columns) == sorted(want_cols)
+    # (rows only in Spark, rows only in the oracle)
+    assert ((Counter(have) - Counter(want)).total(),
+            (Counter(want) - Counter(have)).total()) == (0, 0)
+
+
+@pytest.mark.parametrize("n", [1, 99_999, 100_000])
+def test_lower_median_seq_is_exact(spark, n):
+    from enexory_parquet_export_spark.operators.cdc import _lower_median_seq
+
+    # gappy, unordered, with repeats, spread over 16 partitions
+    log = spark.range(0, 3 * n, 3, numPartitions=16).select(
+        (F.col("id") * F.col("id") % 1_000_003).alias("seq"))
+    seqs = sorted(r["seq"] for r in log.collect())
+    assert _lower_median_seq(log) == seqs[(n + 1) // 2 - 1]

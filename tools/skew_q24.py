@@ -10,14 +10,14 @@ and reports wall time plus per-stage task-duration quantiles
 measured rather than guessed.
 
 Expected outcome (and the design argument being tested): the merge
-pipeline is hot-key-IMMUNE by construction — ``consolidate`` and the
-snapshot are hash aggregations with map-side partial combine (the hot
-key collapses to one row per mapper before the exchange), and
-``apply_changes`` joins AFTER consolidation, where both sides carry at
-most one row per (day, pk).  A skew-sensitive formulation (window
-dedup over pk, or joining the raw changelog) would straggle; this one
-must not.  Criterion: no completed stage with max task > 4× its median
-(ignoring sub-second stages, where scheduler jitter dominates).
+pipeline is hot-key-IMMUNE by construction — q24 is ONE ``consolidate``
+hash aggregation with map-side partial combine (the hot key collapses
+to one row per mapper before the exchange), and the exact-median split
+is two driver aggregations with no exchange on the key.  A
+skew-sensitive formulation (window dedup over pk, or joining the raw
+changelog) would straggle; this one must not.  Criterion: no completed
+stage with max task > 4× its median (ignoring sub-second stages, where
+scheduler jitter dominates).
 
 Usage::
 
